@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import re
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from vector_search_ai_assistant_mongodbvcore_spark.plans.sql_rewrite import (
@@ -74,6 +74,7 @@ def test_blank_quoted_preserves_offsets_and_structure(s):
 
 @settings(max_examples=300, deadline=None)
 @given(_texts)
+@example("cosine_sim(cosine_sim(a, b), x)")
 def test_call_spans_are_balanced_and_nonoverlapping(s):
     b = VectorSqlSession._blank_quoted(s)
     spans = _call_spans(b, "cosine_sim")

@@ -7,6 +7,8 @@ ivf.py             — IVF index: KMeans build, centroid-pruned/multi-probe sear
                      int8 + product-quantization (IVF-PQ) storage, incremental
                      add/remove with frozen centroids (V4/V5)
 partitioned_ann.py — per-partition local ANN (hnswlib kernel env-gated) (V3)
+index_base.py      — the lifecycle shared by IvfIndex / LshIndex / PartitionedHnswIndex /
+                     Bm25Index: meta, build_if_absent, duplicate guard, compact
 conversation.py    — running-token-sum history window + chronological re-sort (W1-W3)
 prompt_budget.py   — token-budgeted proportional prompt trim (F5/F6/A5)
 sessions.py        — session/message CRUD over the mutable-table layer (S3-S7, F7/F8)

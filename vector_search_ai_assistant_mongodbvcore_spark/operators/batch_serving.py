@@ -26,6 +26,11 @@ This module holds the shared plumbing:
   topk_per_query          the global merge: row_number window per query
                           (score desc, id asc — the engine-wide ranking
                           contract) cut to k, emitting a 1-based `rank`
+  cosine_topk_per_query   score (query_id, vector) candidates, apply the
+                          score hygiene, cut per query — the IVF/LSH tail
+  exact_rerank /          the quantized IVF/LSH indexes' full-precision
+  exact_rerank_many       rerank of a k*expand shortlist against the
+                          source table (one broadcast join per call)
 
 Output contract shared by every search_many: one row per (query, hit),
 columns (query_id, <id_col>, score, rank), rank 1..k by (score desc,
@@ -34,12 +39,19 @@ id asc) — feed straight into operators.eval.evaluate_retrieval.
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from vector_search_ai_assistant_mongodbvcore_spark.functions.vector import (
+    cosine_similarity,
+)
+from vector_search_ai_assistant_mongodbvcore_spark.operators.vector_search import (
+    vector_search,
+)
 
 
 def _spark_type_of(value) -> str:
@@ -164,3 +176,84 @@ def finish_scores(
     if round_scores is not None:
         out = out.withColumn(score_col, F.round(F.col(score_col), round_scores))
     return out
+
+
+def cosine_topk_per_query(
+    cand: DataFrame,
+    pairs: "list[tuple]",
+    id_col: str,
+    vector_col: str,
+    k: int,
+    use_pandas: bool,
+    round_scores: "int | None",
+) -> DataFrame:
+    """Per-query cosine top-k over (query_id, <id_col>, <vector_col>)
+    candidates: the Arrow-batched scorer (use_pandas) or the codegen
+    cosine against a `_qvec` column the caller routed in, then
+    finish_scores and topk_per_query."""
+    if use_pandas:
+        scorer = make_cosine_scores_by_query(normalized_query_matrix(pairs))
+        scored = cand.withColumn("score", scorer(F.col("query_id"), F.col(vector_col)))
+    else:
+        scored = cand.withColumn(
+            "score",
+            cosine_similarity(F.col(vector_col).cast("array<double>"), F.col("_qvec")),
+        )
+    scored = finish_scores(scored, "score", round_scores)
+    return topk_per_query(scored, "query_id", id_col, "score", k)
+
+
+def exact_rerank(
+    approx: DataFrame,
+    exact_source: DataFrame,
+    query,
+    k: int,
+    vector_col: str,
+    id_col: "str | None",
+    use_pandas: bool,
+    round_scores: "int | None",
+) -> DataFrame:
+    """Full-precision rerank of one query's quantized shortlist: the
+    shortlist ids (`id_col`, else approx's first column) are broadcast
+    into a semi join against the source table and rescored exactly. At
+    warehouse scale keep the source bucketed by id so the semi join
+    prunes instead of scanning."""
+    key = id_col if id_col is not None else approx.columns[0]
+    exact_cands = exact_source.join(F.broadcast(approx.select(key)), key, "left_semi")
+    return vector_search(
+        exact_cands,
+        query,
+        k=k,
+        vector_col=vector_col,
+        use_pandas=use_pandas,
+        id_col=id_col,
+        round_scores=round_scores,
+    )
+
+
+def exact_rerank_many(
+    approx: DataFrame,
+    exact_source: DataFrame,
+    pairs: "list[tuple]",
+    qid_type: str,
+    k: int,
+    id_col: str,
+    vector_col: str,
+    use_pandas: bool,
+    round_scores: "int | None",
+) -> DataFrame:
+    """exact_rerank for a whole query batch in ONE join: the Q×shortlist
+    (query_id, id) set is broadcast against the source table."""
+    shortlist = approx.select("query_id", id_col)
+    exact_cands = exact_source.join(F.broadcast(shortlist), id_col).select(
+        "query_id", id_col, vector_col
+    )
+    if not use_pandas:
+        qvecs = exact_source.sparkSession.createDataFrame(
+            [(qid, [float(x) for x in vec]) for qid, vec in pairs],
+            f"query_id {qid_type}, _qvec array<double>",
+        )
+        exact_cands = exact_cands.join(F.broadcast(qvecs), "query_id")
+    return cosine_topk_per_query(
+        exact_cands, pairs, id_col, vector_col, k, use_pandas, round_scores
+    )

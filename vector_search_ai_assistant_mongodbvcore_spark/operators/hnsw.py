@@ -30,12 +30,17 @@ from __future__ import annotations
 
 import heapq
 import io
-import json
 import os
 import uuid
 from typing import Iterator
 
 import numpy as np
+
+from vector_search_ai_assistant_mongodbvcore_spark.operators.index_base import (
+    MaterializedIndex,
+    apply_duplicate_policy,
+    data_fingerprint,
+)
 
 __all__ = ["NumpyHNSW", "numpy_hnsw_index_factory", "PartitionedHnswIndex"]
 
@@ -319,7 +324,7 @@ def _cached_segment(segment_id: str, payload: bytes) -> NumpyHNSW:
     return got
 
 
-class PartitionedHnswIndex:
+class PartitionedHnswIndex(MaterializedIndex):
     """Materialized per-partition HNSW: the reference's `vector-hnsw`
     index kind (MongoDbService.cs:119-143) as a build-once / serve-many
     artifact.  HNSW has no distributed primitive, so the scale form is a
@@ -350,28 +355,7 @@ class PartitionedHnswIndex:
     unreferenced directory, swept best-effort by the next successful
     flip (the r13 terms-rotation discipline)."""
 
-    def __init__(self, spark, path: str, dataplane=None):
-        from vector_search_ai_assistant_mongodbvcore_spark.sources import (
-            managed_table as _mt,
-        )
-
-        self.spark = spark
-        self.path = path
-        self.plane = dataplane if dataplane is not None else _mt._DEFAULT_DATAPLANE
-
     # ---- metadata --------------------------------------------------------
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, "meta.json")
-
-    def exists(self) -> bool:
-        return self.plane.exists(self._meta_path())
-
-    def meta(self) -> dict:
-        return json.loads(self.plane.read_text(self._meta_path()))
-
-    def _write_meta(self, meta: dict) -> None:
-        self.plane.write_text(self._meta_path(), json.dumps(meta))
 
     def _read_meta_for_rw(self) -> dict:
         """meta() plus the layout gate every data-touching path needs: a
@@ -387,22 +371,9 @@ class PartitionedHnswIndex:
             )
         return meta
 
-    def build_if_absent(self, df, **build_kwargs) -> "PartitionedHnswIndex":
-        from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import (
-            data_fingerprint,
-        )
-
-        if not self.exists():
-            self.build(df, **build_kwargs)
-            return self
-        m = self.meta()
-        stale = (
-            m.get("fingerprint") != data_fingerprint(df)
-            or m.get("layout") != _SEGMENT_LAYOUT  # older on-disk format
-        )
-        if stale:
-            self.build(df, **build_kwargs)
-        return self
+    def _stale(self, meta: dict, df) -> bool:
+        # an older on-disk segment format is stale like changed data
+        return super()._stale(meta, df) or meta.get("layout") != _SEGMENT_LAYOUT
 
     # ---- build -----------------------------------------------------------
 
@@ -484,10 +455,6 @@ class PartitionedHnswIndex:
         shards: int = 8,
         seed: int = 42,
     ) -> "PartitionedHnswIndex":
-        from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import (
-            data_fingerprint,
-        )
-
         id_type = df.schema[id_col].dataType.simpleString()
         segments = self._build_segments_df(
             df, vector_col, id_col, id_type, m, ef_construction, ef_search,
@@ -541,56 +508,16 @@ class PartitionedHnswIndex:
         `round_scores` quantizes scores BEFORE the global merge (with the
         id tiebreak) — the same contract as IvfIndex/LshIndex serving, so
         the raw-SQL `round(cosine_sim(...), d)` shape ranks identically on
-        every access path. The segment-LOCAL cut stays unrounded (it is
-        already approximate by beam construction)."""
-        import pandas as pd
+        every access path."""
         from pyspark.sql import functions as F
-
-        meta = self._read_meta_for_rw()
-        id_col = meta["id_col"]
-        deleted = {sid: frozenset(ids) for sid, ids in meta["deleted"].items() if ids}
-        q = np.asarray([float(x) for x in query], dtype=np.float64)
-        ef = int(ef_search) if ef_search is not None else None
-
-        def serve(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    sid = row["segment_id"]
-                    kernel = _cached_segment(sid, bytes(row["payload"]))
-                    ids = row["ids"]
-                    dead = deleted.get(sid, frozenset())
-                    # over-fetch by the segment's dead ROW count (an id
-                    # can occupy several graph rows if the source held
-                    # duplicates — counting distinct tombstones would
-                    # under-fetch and drop a deserving live candidate)
-                    n_dead_rows = (
-                        int(np.isin(np.asarray(ids), list(dead)).sum())
-                        if dead
-                        else 0
-                    )
-                    idx, sims = kernel.search(q, k + n_dead_rows, ef_search=ef)
-                    keep_ids, keep_scores = [], []
-                    for i, s in zip(idx, sims):
-                        doc = ids[i]
-                        if doc in dead:
-                            continue
-                        keep_ids.append(doc)
-                        keep_scores.append(
-                            round(float(s), round_scores)
-                            if round_scores is not None
-                            else float(s)
-                        )
-                        if len(keep_ids) >= k:
-                            break
-                    yield pd.DataFrame({id_col: keep_ids, "score": keep_scores})
 
         # no repartition: the build writes ~one parquet file per segment,
         # so the scan already yields segment-aligned splits — an Exchange
         # here would ship every graph payload across the cluster per query
-        scan = self._segments_scan(meta)
-        out_schema = f"{id_col} {meta['id_type']}, score double"
-        local = scan.mapInPandas(serve, out_schema)
-        return local.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+        local, id_col = self._search_many_candidates(
+            [(0, query)], "int", k, ef_search, round_scores
+        )
+        return local.drop("query_id").orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
     def _search_many_candidates(
         self,
@@ -600,12 +527,14 @@ class PartitionedHnswIndex:
         ef_search: "int | None",
         round_scores: "int | None",
     ):
-        """Segment-local candidates for the whole query batch: each
+        """Segment-local candidates for a query batch — the one serving
+        kernel of search() (a batch of one) and search_many(): each
         segment task deserializes its graph ONCE (worker-local cache) and
-        beam-serves every query against it — at most S×Q×k rows leave the
-        serving stage.  Per-query kernel calls, tombstone over-fetch and
-        rounding are identical to search(), so the global cut selects the
-        same rows the per-query loop would."""
+        beam-serves every query against it, so at most S×Q×k rows
+        (query_id, <id_col>, score) leave the serving stage. Returns
+        (frame, id_col). Scores are rounded before the caller's global
+        cut; the segment-LOCAL cut stays unrounded (it is already
+        approximate by beam construction)."""
         import pandas as pd
 
         meta = self._read_meta_for_rw()
@@ -624,6 +553,10 @@ class PartitionedHnswIndex:
                     kernel = _cached_segment(sid, bytes(row["payload"]))
                     ids = row["ids"]
                     dead = deleted.get(sid, frozenset())
+                    # over-fetch by the segment's dead ROW count (an id
+                    # can occupy several graph rows if the source held
+                    # duplicates — counting distinct tombstones would
+                    # under-fetch and drop a deserving live candidate)
                     n_dead_rows = (
                         int(np.isin(np.asarray(ids), list(dead)).sum())
                         if dead
@@ -710,36 +643,24 @@ class PartitionedHnswIndex:
         return exploded.select(id_col)
 
     def add_documents(
-        self, df, id_col: str, on_duplicate: str = "error"
+        self, df, id_col: "str | None" = None, on_duplicate: str = "error"
     ) -> "PartitionedHnswIndex":
         """Append-only delta segment: the new docs get their OWN graph
         (existing segments are immutable); serve-time merge sees it at
         the next call. An upsert's re-added id is NOT tombstoned in its
-        new segment — tombstones are per-segment (see remove_documents)."""
-        if on_duplicate not in ("error", "skip", "trust"):
-            raise ValueError(
-                f"on_duplicate must be error|skip|trust, got {on_duplicate!r}"
-            )
+        new segment — tombstones are per-segment (see remove_documents).
+        The duplicate guard checks LIVE ids only: a tombstoned (removed)
+        id is re-addable in every mode — the upsert contract
+        remove_documents documents."""
         meta = self._read_meta_for_rw()
-        if on_duplicate != "trust":
-            # LIVE ids only: a tombstoned (removed) id is re-addable in
-            # every mode — the upsert contract remove_documents documents
-            existing = self._live_ids_df(meta).withColumnRenamed(meta["id_col"], id_col)
-            dups = df.select(id_col).distinct().join(existing, id_col, "left_semi")
-            if on_duplicate == "error":
-                offenders = [r[id_col] for r in dups.limit(10).collect()]
-                if offenders:
-                    raise ValueError(
-                        f"ids already indexed: {offenders!r}; "
-                        f"use on_duplicate='skip' to add only new ids"
-                    )
-            else:
-                df = df.join(dups, id_col, "left_anti")
-                if df.isEmpty():
-                    return self
-        delta = df.withColumnRenamed(id_col, meta["id_col"])
+        id_col = self._id_col(meta, id_col)
+        df = apply_duplicate_policy(
+            df, id_col, on_duplicate, lambda _: self._live_ids_df(meta)
+        )
+        if on_duplicate == "skip" and df.isEmpty():
+            return self
         segments = self._build_segments_df(
-            delta, meta["vector_col"], meta["id_col"], meta["id_type"],
+            df, meta["vector_col"], id_col, meta["id_type"],
             meta["m"], meta["ef_construction"], meta["ef_search"],
             meta["seed"], shards=1,
         )
@@ -764,6 +685,7 @@ class PartitionedHnswIndex:
         if not ids:
             return self
         meta = self._read_meta_for_rw()
+        self._id_col(meta, id_col)
         hits = (
             self._segments_scan(meta)
             .select("segment_id", F.explode("ids").alias("_id"))

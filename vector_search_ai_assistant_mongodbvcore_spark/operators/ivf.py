@@ -22,25 +22,30 @@ brute force at n_probe = num_lists, monotone recall in n_probe on uniform
 random vectors (the no-structure worst case), and recall >= 0.9 at
 n_probe=1 of 4 on clustered data (the regime IVF exists for).
 
-HNSW (MongoDbService.cs:119-143) is intentionally NOT built: no distributed
-primitive exists, and batch-scale retrieval is dominated by scan+prune
-(SURVEY.md §7 hard part 1). A per-partition hnswlib index via mapPartitions
-is the documented extension point if per-query latency ever matters more
-than throughput.
+HNSW (MongoDbService.cs:119-143) is the sibling kind
+operators/hnsw.PartitionedHnswIndex: one graph per hash segment, merged
+per query. The four index kinds share the lifecycle in
+operators/index_base.py.
 """
 
 from __future__ import annotations
 
 import io
-import json
 import os
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vector_search_ai_assistant_mongodbvcore_spark.operators.index_base import (
+    MaterializedIndex,
+    apply_duplicate_policy,
+    data_fingerprint,
+    decode_vectors,
+    encode_vectors,
+)
 from vector_search_ai_assistant_mongodbvcore_spark.plans import scan_cache as _scan_cache
 
 from vector_search_ai_assistant_mongodbvcore_spark.operators.vector_search import (
@@ -50,58 +55,7 @@ from vector_search_ai_assistant_mongodbvcore_spark.operators.vector_search impor
 DEFAULT_NUM_LISTS = 2  # MongoDbService.cs:158 numLists
 
 
-def data_fingerprint(df: DataFrame) -> dict:
-    """Fingerprint of an index's source table, used by build_if_absent to
-    detect a dataset regenerated under the same path (a stale hit would
-    silently serve the old corpus).
-
-    File-backed sources (the normal case): md5 over the sorted
-    (path, size, mtime_ns) listing of `df.inputFiles()` — a DRIVER-SIDE
-    metadata operation, zero executor work, so the staleness check on the
-    serving path costs O(#files) stats however large the table is. This is
-    the filesystem equivalent of a catalog snapshot id, with the same
-    contract: it versions the SOURCE FILES, not the plan on top of them —
-    two different transformations over the same files fingerprint alike, so
-    build an index from the scan (or bust the cache yourself), exactly as
-    you would with a snapshot-id-keyed index over a view.
-
-    Sources with no file listing (in-memory frames, exotic filesystems where
-    stat fails): fall back to a content fingerprint — row count plus max()
-    of every scalar column, one column-pruned aggregate scan. Small by
-    nature (they fit on the driver) so the scan is acceptable there."""
-    import hashlib
-    from urllib.parse import urlparse
-
-    files = df.inputFiles()
-    if files:
-        try:
-            stats = []
-            for uri in sorted(files):
-                p = urlparse(uri).path
-                st = os.stat(p)
-                stats.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
-            return {
-                "mode": "files",
-                "n_files": str(len(files)),
-                "files_md5": hashlib.md5("\n".join(stats).encode()).hexdigest(),
-            }
-        except OSError:
-            pass  # non-local scheme: fall through to the content scan
-    from pyspark.sql import types as T
-
-    scalar_cols = [
-        f.name
-        for f in df.schema.fields
-        if not isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType, T.BinaryType))
-    ]
-    aggs = [F.count(F.lit(1)).alias("_rows")] + [
-        F.max(c).alias(f"max_{c}") for c in scalar_cols
-    ]
-    row = df.agg(*aggs).collect()[0]
-    return {k: (None if v is None else str(v)) for k, v in row.asDict().items()}
-
-
-class IvfIndex:
+class IvfIndex(MaterializedIndex):
     """IVF-flat index materialized as centroid-partitioned parquet.
 
     `dataplane` (r13): metadata/centroid objects and partition cleanup
@@ -110,30 +64,9 @@ class IvfIndex:
     default the table layer resolves — patched in the object-universe
     test fixtures)."""
 
-    def __init__(self, spark: SparkSession, path: str, dataplane=None):
-        from vector_search_ai_assistant_mongodbvcore_spark.sources import (
-            managed_table as _mt,
-        )
-
-        self.spark = spark
-        self.path = path
-        self.plane = dataplane if dataplane is not None else _mt._DEFAULT_DATAPLANE
+    _compact_dirs = (("data", ("centroid_id",)),)
 
     # ---- build -----------------------------------------------------------
-    def exists(self) -> bool:
-        """V5: index-exists check (the reference lists indexes and builds
-        only when `vectorSearchIndex` is absent, MongoDbService.cs:76-113)."""
-        return self.plane.exists(os.path.join(self.path, "meta.json"))
-
-    def build_if_absent(self, df: DataFrame, **build_kwargs) -> "IvfIndex":
-        """Create-if-missing OR stale, mirroring
-        MongoDbService.CreateVectorIndexIfNotExists. Staleness = the stored
-        data fingerprint no longer matches `df` (regenerated dataset under
-        the same path) — a stale hit would silently serve the old corpus."""
-        if not self.exists() or self.meta().get("fingerprint") != data_fingerprint(df):
-            self.build(df, **build_kwargs)
-        return self
-
     def build(
         self,
         df: DataFrame,
@@ -178,29 +111,17 @@ class IvfIndex:
         )
         km = KMeans(k=num_lists, seed=seed, maxIter=max_iter, featuresCol="_features", predictionCol="centroid_id")
         model = km.fit(fit_input)
-        assigned = model.transform(normed).drop("_features", "_nv")
         pq_model = None
         if quantize == "pq":
-            from vector_search_ai_assistant_mongodbvcore_spark.operators.pq import (
-                fit_pq,
-                pq_encode_col,
-            )
+            from vector_search_ai_assistant_mongodbvcore_spark.operators.pq import fit_pq
 
             pq_model = fit_pq(
                 df, vector_col=vector_col, id_col=id_col, m=pq_m, bits=pq_bits,
                 seed=seed,
             )
-            assigned = assigned.withColumn(
-                "_pq", pq_encode_col(pq_model, vector_col)
-            ).drop(vector_col)
-        elif quantize:
-            from vector_search_ai_assistant_mongodbvcore_spark.functions.vector import (
-                quantize_int8,
-            )
-
-            assigned = assigned.withColumn(
-                "_q8", quantize_int8(F.col(vector_col))
-            ).drop(vector_col)
+        assigned = encode_vectors(
+            model.transform(normed).drop("_features", "_nv"), quantize, vector_col, pq_model
+        )
         # co-locate each list before writing: without this every write task
         # emits a sliver file into every centroid dir (tasks x lists tiny
         # files — a listing/open bottleneck at query time). One hash
@@ -233,15 +154,12 @@ class IvfIndex:
             # consumer (apply_index_changes keys remove/add off the
             # stored id; the SQL serve would decline or, worse,
             # validate against a phantom). Absent id_col => quantized
-            # SQL serving declines to the full scan, and incremental
-            # maintenance falls back to its per-call id column —
-            # both the safe directions.
+            # SQL serving declines to the full scan, and add/remove
+            # take the caller's id_col — both the safe directions.
             meta["id_col"] = id_col
         if pq_model is not None:
             meta["pq_model"] = pq_model
-        self.plane.write_text(
-            os.path.join(self.path, "meta.json"), json.dumps(meta)
-        )
+        self._write_meta(meta)
         return self
 
     # ---- incremental maintenance ----------------------------------------
@@ -269,50 +187,27 @@ class IvfIndex:
         return assign(F.col(vector_col))
 
     def add_documents(
-        self, df: DataFrame, id_col: str, on_duplicate: str = "error"
+        self, df: DataFrame, id_col: "str | None" = None, on_duplicate: str = "error"
     ) -> "IvfIndex":
         """Absorb new vectors near-real-time: each is assigned to its
         nearest EXISTING centroid (the centroids stay frozen — the standard
         IVF maintenance contract; re-fit by rebuilding when drift warrants)
         and APPENDed into that centroid's partition. After add_documents,
         search() == a fresh build that reuses the same centroids (asserted
-        in tests). Duplicate-id guard identical to LshIndex/Bm25Index:
-        error | skip | trust."""
-        if on_duplicate not in ("error", "skip", "trust"):
-            raise ValueError(f"on_duplicate must be error|skip|trust, got {on_duplicate!r}")
+        in tests). Duplicate-id guard: index_base.apply_duplicate_policy."""
         m = self.meta()
+        id_col = self._id_col(m, id_col)
         vector_col = m["vector_col"]
         data_dir = os.path.join(self.path, "data")
-        if on_duplicate != "trust":
-            existing = self.spark.read.parquet(data_dir).select(id_col)
-            dups = df.select(id_col).distinct().join(existing, id_col, "left_semi")
-            if on_duplicate == "error":
-                offenders = [r[id_col] for r in dups.limit(10).collect()]
-                if offenders:
-                    raise ValueError(
-                        f"ids already indexed: {offenders!r}; "
-                        f"use on_duplicate='skip' to add only new ids"
-                    )
-            else:
-                df = df.join(dups, id_col, "left_anti")
-        assigned = df.withColumn("centroid_id", self._assign_col(vector_col))
-        if m.get("quantized") == "pq":
-            from vector_search_ai_assistant_mongodbvcore_spark.operators.pq import (
-                pq_encode_col,
-            )
-
-            # frozen codebooks, same as the frozen centroids above
-            assigned = assigned.withColumn(
-                "_pq", pq_encode_col(m["pq_model"], vector_col)
-            ).drop(vector_col)
-        elif m.get("quantized"):
-            from vector_search_ai_assistant_mongodbvcore_spark.functions.vector import (
-                quantize_int8,
-            )
-
-            assigned = assigned.withColumn("_q8", quantize_int8(F.col(vector_col))).drop(
-                vector_col
-            )
+        df = apply_duplicate_policy(
+            df, id_col, on_duplicate,
+            lambda _: self.spark.read.parquet(data_dir).select(id_col),
+        )
+        # frozen PQ codebooks, same as the frozen centroids
+        assigned = encode_vectors(
+            df.withColumn("centroid_id", self._assign_col(vector_col)),
+            m.get("quantized"), vector_col, m.get("pq_model"),
+        )
         assigned.repartition(F.col("centroid_id")).write.mode("append").partitionBy(
             "centroid_id"
         ).parquet(data_dir)
@@ -320,73 +215,29 @@ class IvfIndex:
         _scan_cache.invalidate(self.spark, self.path)
         return self
 
-    def remove_documents(self, ids, id_col: str) -> "IvfIndex":
+    def remove_documents(self, ids, id_col: "str | None" = None) -> "IvfIndex":
         """Delete vectors near-real-time: copy-on-write of exactly the
-        centroid partitions holding the doomed ids (dynamic partition
-        overwrite; an emptied partition is dropped). Unknown ids are
-        ignored; search() afterwards == a fresh build over the survivors
-        with the same centroids."""
-        ids = list(ids)
-        if not ids:
-            return self
-        data_dir = os.path.join(self.path, "data")
-        scan = self.spark.read.parquet(data_dir)
-        doomed = scan.filter(F.col(id_col).isin(ids))
-        touched = [r["centroid_id"] for r in doomed.select("centroid_id").distinct().collect()]
-        if not touched:
-            return self
-        survivors = scan.filter(
-            F.col("centroid_id").isin(touched) & ~F.col(id_col).isin(ids)
-        ).localCheckpoint(eager=True)
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = self.spark.conf.get(key, None)
-        self.spark.conf.set(key, "dynamic")
-        try:
-            survivors.repartition(F.col("centroid_id")).write.mode("overwrite").partitionBy(
-                "centroid_id"
-            ).parquet(data_dir)
-        finally:
-            if prev is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, prev)
-        alive = {r["centroid_id"] for r in survivors.select("centroid_id").distinct().collect()}
-        for c in touched:
-            if c not in alive:
-                self.plane.remove_tree(
-                    os.path.join(data_dir, f"centroid_id={c}")
-                )
-        self.spark.catalog.refreshByPath(data_dir)
-        _scan_cache.invalidate(self.spark, self.path)
-        return self
-
-    def compact(self, max_files_per_partition: int = 8) -> int:
-        """Maintenance for the append add-path (see LshIndex.compact):
-        rewrites centroid partitions whose file count reached the
-        threshold; returns partitions rewritten, 0 = zero IO."""
+        centroid partitions holding the doomed ids
+        (sources/maintenance.cow_delete_ids; an emptied partition is
+        dropped). Unknown ids are ignored; search() afterwards == a fresh
+        build over the survivors with the same centroids."""
         from vector_search_ai_assistant_mongodbvcore_spark.sources.maintenance import (
-            compact_partitioned_dir,
+            cow_delete_ids,
         )
 
-        n = compact_partitioned_dir(
-            self.spark,
-            os.path.join(self.path, "data"),
-            ["centroid_id"],
-            max_files_per_partition,
-            plane=self.plane,
-        )
-        if n:
-            _scan_cache.invalidate(self.spark, self.path)
-        return n
+        ids = list(ids)
+        if ids:
+            cow_delete_ids(
+                self.spark, os.path.join(self.path, "data"), ["centroid_id"],
+                self._id_col(self.meta(), id_col), ids, plane=self.plane,
+            )
+        return self
 
     # ---- search ----------------------------------------------------------
     def _centroids(self) -> np.ndarray:
         return np.load(
             io.BytesIO(self.plane.read_bytes(os.path.join(self.path, "centroids.npy")))
         )
-
-    def meta(self) -> dict:
-        return json.loads(self.plane.read_text(os.path.join(self.path, "meta.json")))
 
     def nearest_centroids(self, query: list[float], n_probe: int) -> list[int]:
         c = self._centroids()
@@ -416,16 +267,21 @@ class IvfIndex:
         (quantize=True) or from PQ ADC lookups over the stored codes with
         the float vectors never read (quantize="pq"); with `exact_source`
         the shortlist of k*expand ids is rescored at full precision
-        against the source table (broadcast semi join — keep the source
-        bucketed by id at warehouse scale). PQ scores are coarse by
-        design: treat no-rerank PQ results as candidate sets."""
+        against the source table (batch_serving.exact_rerank). PQ scores
+        are coarse by design: treat no-rerank PQ results as candidate
+        sets."""
+        from vector_search_ai_assistant_mongodbvcore_spark.operators.batch_serving import (
+            exact_rerank,
+        )
+
         meta = self.meta()
         probes = self.nearest_centroids(query, n_probe)
         scan = _scan_cache.cached_parquet(self.spark, os.path.join(self.path, "data")).filter(
             F.col("centroid_id").isin(probes)
         )
         quantized = meta.get("quantized", False)
-        shortlist_k = k * expand if (quantized and exact_source is not None) else k
+        rerank = bool(quantized) and exact_source is not None
+        shortlist_k = k * expand if rerank else k
         if quantized == "pq":
             from vector_search_ai_assistant_mongodbvcore_spark.operators.pq import (
                 adc_score_col,
@@ -446,14 +302,8 @@ class IvfIndex:
                 .limit(shortlist_k)
             )
         else:
-            if quantized:
-                from vector_search_ai_assistant_mongodbvcore_spark.functions.vector import (
-                    dequantize_int8,
-                )
-
-                scan = scan.withColumn(meta["vector_col"], dequantize_int8("_q8")).drop("_q8")
             approx = vector_search(
-                scan,
+                decode_vectors(scan, quantized, meta["vector_col"]),
                 query,
                 k=shortlist_k,
                 vector_col=meta["vector_col"],
@@ -461,19 +311,11 @@ class IvfIndex:
                 id_col=id_col,
                 round_scores=round_scores,
             ).drop("centroid_id")
-        if not (quantized and exact_source is not None):
+        if not rerank:
             return approx
-        key = id_col if id_col is not None else approx.columns[0]
-        ids = approx.select(key)
-        exact_cands = exact_source.join(F.broadcast(ids), key, "left_semi")
-        return vector_search(
-            exact_cands,
-            query,
-            k=k,
-            vector_col=meta["vector_col"],
-            use_pandas=use_pandas,
-            id_col=id_col,
-            round_scores=round_scores,
+        return exact_rerank(
+            approx, exact_source, query, k, meta["vector_col"], id_col, use_pandas,
+            round_scores,
         )
 
     def search_many(
@@ -505,14 +347,9 @@ class IvfIndex:
         precision (one broadcast join for ALL queries)."""
         from vector_search_ai_assistant_mongodbvcore_spark.operators.batch_serving import (
             collect_query_batch,
-            finish_scores,
-            make_cosine_scores_by_query,
-            normalized_query_matrix,
+            cosine_topk_per_query,
+            exact_rerank_many,
             topk_per_query,
-        )
-        from vector_search_ai_assistant_mongodbvcore_spark.functions.vector import (
-            cosine_similarity,
-            dequantize_int8,
         )
 
         pairs, qid_type = collect_query_batch(queries, query_id_col, query_vec_col)
@@ -520,7 +357,8 @@ class IvfIndex:
         key = id_col if id_col is not None else "vec_id"
         vector_col = meta["vector_col"]
         quantized = meta.get("quantized", False)
-        shortlist_k = k * expand if (quantized and exact_source is not None) else k
+        rerank = bool(quantized) and exact_source is not None
+        shortlist_k = k * expand if rerank else k
 
         # driver-side routing: probes per query over the tiny centroid set
         probe_rows = [
@@ -581,45 +419,13 @@ class IvfIndex:
             )
             approx = topk_per_query(scored, "query_id", key, "score", shortlist_k)
         else:
-            if quantized:
-                cand = cand.withColumn(vector_col, dequantize_int8("_q8")).drop("_q8")
-            if use_pandas:
-                scorer = make_cosine_scores_by_query(normalized_query_matrix(pairs))
-                scored = cand.withColumn(
-                    "score", scorer(F.col("query_id"), F.col(vector_col))
-                )
-            else:
-                scored = cand.withColumn(
-                    "score",
-                    cosine_similarity(
-                        F.col(vector_col).cast("array<double>"), F.col("_qvec")
-                    ),
-                )
-            scored = finish_scores(scored, "score", round_scores)
-            approx = topk_per_query(scored, "query_id", key, "score", shortlist_k)
-        if not (quantized and exact_source is not None):
+            approx = cosine_topk_per_query(
+                decode_vectors(cand, quantized, vector_col), pairs, key, vector_col,
+                shortlist_k, use_pandas, round_scores,
+            )
+        if not rerank:
             return approx
-        # full-precision rerank of every query's shortlist in ONE join:
-        # the Q×shortlist_k id set is broadcast against the source table
-        shortlist = approx.select("query_id", key)
-        exact_cands = exact_source.join(F.broadcast(shortlist), key).select(
-            "query_id", key, vector_col
+        return exact_rerank_many(
+            approx, exact_source, pairs, qid_type, k, key, vector_col, use_pandas,
+            round_scores,
         )
-        if use_pandas:
-            scorer = make_cosine_scores_by_query(normalized_query_matrix(pairs))
-            rescored = exact_cands.withColumn(
-                "score", scorer(F.col("query_id"), F.col(vector_col))
-            )
-        else:
-            qvecs = self.spark.createDataFrame(
-                [(qid, [float(x) for x in vec]) for qid, vec in pairs],
-                f"query_id {qid_type}, _qvec array<double>",
-            )
-            rescored = exact_cands.join(F.broadcast(qvecs), "query_id").withColumn(
-                "score",
-                cosine_similarity(
-                    F.col(vector_col).cast("array<double>"), F.col("_qvec")
-                ),
-            )
-        rescored = finish_scores(rescored, "score", round_scores)
-        return topk_per_query(rescored, "query_id", key, "score", k)

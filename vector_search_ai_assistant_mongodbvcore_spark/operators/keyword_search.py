@@ -37,6 +37,11 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vector_search_ai_assistant_mongodbvcore_spark.operators.index_base import (
+    MaterializedIndex,
+    apply_duplicate_policy,
+    data_fingerprint,
+)
 from vector_search_ai_assistant_mongodbvcore_spark.plans import scan_cache as _scan_cache
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"  # lowercase alnum runs are terms
@@ -193,13 +198,13 @@ def bm25_cte_sql(
     )"""
 
 
-class Bm25Index:
+class Bm25Index(MaterializedIndex):
     """MATERIALIZED inverted index for BM25 serving: build once, serve many
     queries, ABSORB NEW DOCUMENTS INCREMENTALLY (the keyword twin of the
     reference's near-real-time AddRemoveData path, AddRemoveData.cs:23-125).
 
-    Layout (same build/exists/build_if_absent/meta discipline as IvfIndex /
-    LshIndex) — split so that adds are appends:
+    Layout (the shared operators/index_base lifecycle) — split so that
+    adds are appends:
 
       postings/   parquet PARTITIONED BY term-bucket; one row per
                   (term, doc) carrying tf + the doc's dl. Document-local
@@ -231,17 +236,9 @@ class Bm25Index:
     postings and the id-buckets holding their doc rows (dynamic partition
     overwrite), df decrements via the atomic terms swap."""
 
-    def __init__(self, spark, path: str, dataplane=None):
-        from vector_search_ai_assistant_mongodbvcore_spark.sources import (
-            managed_table as _mt,
-        )
-
-        self.spark = spark
-        self.path = path
-        # r13: metadata + terms-table rotation run on the data-plane seam
-        # (see _swap_terms — the old rename-rename rotation was the one
-        # POSIX-only primitive left in the index tablespace)
-        self.plane = dataplane if dataplane is not None else _mt._DEFAULT_DATAPLANE
+    # the two dirs add_documents appends into; the terms table is
+    # swap-rewritten wholesale on every add and needs no compaction
+    _compact_dirs = (("postings", ("bucket",)), ("docs", ("id_bucket",)))
 
     # ---- bucket hash (portable Python/Catalyst pair) ---------------------
     @staticmethod
@@ -257,17 +254,6 @@ class Bm25Index:
         ).cast("int")
 
     # ---- lifecycle -------------------------------------------------------
-    def exists(self) -> bool:
-        import os
-
-        return self.plane.exists(os.path.join(self.path, "meta.json"))
-
-    def meta(self) -> dict:
-        import json
-        import os
-
-        return json.loads(self.plane.read_text(os.path.join(self.path, "meta.json")))
-
     def _terms_dir(self, meta: "dict | None" = None) -> str:
         """Current terms-table dir, resolved through the meta pointer —
         attempt-unique names since r13 ("terms" is the legacy default, so
@@ -278,13 +264,6 @@ class Bm25Index:
         meta = self.meta() if meta is None else meta
         return os.path.join(self.path, meta.get("terms_dir", "terms"))
 
-    def build_if_absent(self, docs: DataFrame, **kwargs) -> "Bm25Index":
-        from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import data_fingerprint
-
-        if not self.exists() or self.meta().get("fingerprint") != data_fingerprint(docs):
-            self.build(docs, **kwargs)
-        return self
-
     def build(
         self,
         docs: DataFrame,
@@ -292,11 +271,8 @@ class Bm25Index:
         id_col: str = "doc_id",
         n_buckets: int = 64,
     ) -> "Bm25Index":
-        import json
         import os
         import uuid
-
-        from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import data_fingerprint
 
         tf, dl, dfreq = self._doc_facts(docs, text_col, id_col, n_buckets)
         tf.repartition(F.col("bucket")).write.mode("overwrite").partitionBy(
@@ -310,19 +286,16 @@ class Bm25Index:
             F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_tokens")
         ).collect()[0]
         self.plane.makedirs(self.path)
-        self.plane.write_text(
-            os.path.join(self.path, "meta.json"),
-            json.dumps(
-                {
-                    "n_docs": int(row["n_docs"]),
-                    "total_tokens": int(row["total_tokens"] or 0),
-                    "n_buckets": n_buckets,
-                    "id_col": id_col,
-                    "text_col": text_col,
-                    "terms_dir": terms_name,
-                    "fingerprint": data_fingerprint(docs),
-                }
-            ),
+        self._write_meta(
+            {
+                "n_docs": int(row["n_docs"]),
+                "total_tokens": int(row["total_tokens"] or 0),
+                "n_buckets": n_buckets,
+                "id_col": id_col,
+                "text_col": text_col,
+                "terms_dir": terms_name,
+                "fingerprint": data_fingerprint(docs),
+            }
         )
         self._sweep_orphan_terms(terms_name)
         return self
@@ -399,20 +372,16 @@ class Bm25Index:
         self,
         docs: DataFrame,
         text_col: str = "text",
-        id_col: str = "doc_id",
+        id_col: "str | None" = None,
         on_duplicate: str = "error",
     ) -> "Bm25Index":
         """Absorb documents without touching existing postings:
 
           * incoming ids are checked against the indexed-id table (an
-            id-bucket-PRUNED anti/semi join — the check reads only the
+            id-bucket-PRUNED semi join — the check reads only the
             incoming ids' buckets, not the whole table); a re-add would
             silently double-count df/dl/N and corrupt every score, so the
-            guard is on by default:
-              on_duplicate='error'  raise ValueError naming offenders
-              on_duplicate='skip'   drop already-indexed ids, add the rest
-              on_duplicate='trust'  skip the check (caller guarantees new
-                                    ids; saves the id-bucket read)
+            guard (index_base.apply_duplicate_policy) is on by default
           * new (term, doc, tf, dl) rows APPEND into their buckets
           * the terms table merges df counts and atomically swaps
             (attempt-unique write + meta-pointer flip, see _swap_terms)
@@ -421,37 +390,21 @@ class Bm25Index:
         After add_documents, search() results are IDENTICAL to a fresh
         build over the union corpus (asserted in tests) — df/dl/N/avgdl are
         all exact integers or exact ratios of them."""
-        import json
         import os
 
-        if on_duplicate not in ("error", "skip", "trust"):
-            raise ValueError(f"on_duplicate must be error|skip|trust, got {on_duplicate!r}")
         meta = self.meta()
-        n_buckets, stored_id = meta["n_buckets"], meta["id_col"]
-        if id_col != stored_id:
-            raise ValueError(f"index is keyed by {stored_id!r}, got {id_col!r}")
+        n_buckets, id_col = meta["n_buckets"], self._id_col(meta, id_col)
 
-        if on_duplicate != "trust":
-            incoming = docs.select(id_col).distinct().withColumn(
-                "id_bucket", self.bucket_col(F.col(id_col).cast("string"), n_buckets)
-            )
+        def indexed_ids(incoming: DataFrame) -> DataFrame:
             buckets = [
                 r["id_bucket"]
-                for r in incoming.select("id_bucket").distinct().collect()
+                for r in incoming.select(
+                    self.bucket_col(F.col(id_col).cast("string"), n_buckets).alias("id_bucket")
+                ).distinct().collect()
             ]
-            existing = self._doc_rows().filter(F.col("id_bucket").isin(buckets))
-            dups = incoming.join(existing, id_col, "left_semi")
-            if on_duplicate == "error":
-                offenders = [r[id_col] for r in dups.limit(10).collect()]
-                if offenders:
-                    raise ValueError(
-                        f"ids already indexed (re-adding would corrupt df/dl/N): "
-                        f"{offenders!r}; use on_duplicate='skip' to add only new ids"
-                    )
-            else:  # skip
-                docs = docs.join(
-                    dups.select(id_col), id_col, "left_anti"
-                )
+            return self._doc_rows().filter(F.col("id_bucket").isin(buckets))
+
+        docs = apply_duplicate_policy(docs, id_col, on_duplicate, indexed_ids)
 
         tf, dl, dfreq = self._doc_facts(docs, text_col, id_col, n_buckets)
         row = dl.agg(
@@ -475,52 +428,22 @@ class Bm25Index:
 
         meta["n_docs"] = int(meta["n_docs"]) + int(row["n_docs"])
         meta["total_tokens"] = int(meta["total_tokens"]) + int(row["total_tokens"] or 0)
-        self.plane.write_text(
-            os.path.join(self.path, "meta.json"), json.dumps(meta)
-        )
+        self._write_meta(meta)
         self._sweep_orphan_terms(meta["terms_dir"])
         return self
 
-    def compact(self, max_files_per_partition: int = 8) -> int:
-        """Maintenance for the append add-path (see LshIndex.compact):
-        rewrites postings term-buckets AND docs id-buckets whose parquet
-        file count reached the threshold (the two dirs add_documents
-        appends into; the terms table is swap-rewritten wholesale on
-        every add and needs no compaction). Returns total partitions
-        rewritten, 0 = zero IO; search() is unchanged."""
-        import os
-
-        from vector_search_ai_assistant_mongodbvcore_spark.sources.maintenance import (
-            compact_partitioned_dir,
-        )
-
-        n = compact_partitioned_dir(
-            self.spark,
-            os.path.join(self.path, "postings"),
-            ["bucket"],
-            max_files_per_partition,
-            plane=self.plane,
-        )
-        n += compact_partitioned_dir(
-            self.spark,
-            os.path.join(self.path, "docs"),
-            ["id_bucket"],
-            max_files_per_partition,
-            plane=self.plane,
-        )
-        if n:
-            _scan_cache.invalidate(self.spark, self.path)
-        return n
-
-    def remove_documents(self, ids: Sequence) -> "Bm25Index":
+    def remove_documents(
+        self, ids: Sequence, id_col: "str | None" = None
+    ) -> "Bm25Index":
         """Delete indexed documents near-real-time — the keyword twin of the
         reference's delete path (AddRemoveData.cs:23-125 'remove' action →
         MongoDbService.DeleteProductAsync, immediately unsearchable):
 
           1. the removed docs' postings are found with one scan of the
              postings table (predicate-pushed on id); the TERM-buckets they
-             occupy are rewritten copy-on-write via dynamic partition
-             overwrite — untouched buckets' files are never rewritten
+             occupy are rewritten copy-on-write
+             (sources/maintenance.cow_delete_ids) — untouched buckets'
+             files are never rewritten
           2. the docs table drops the ids the same way (id-bucket COW —
              pruned to the removed ids' buckets)
           3. per-term df decrements merge into the terms table (atomic
@@ -533,11 +456,14 @@ class Bm25Index:
         Scale: cost is O(touched term-buckets' rows) for the COW rewrite —
         a handful of partitions for a handful of docs — plus the vocabulary-
         sized terms swap; never a full-index rewrite."""
-        import json
         import os
 
+        from vector_search_ai_assistant_mongodbvcore_spark.sources.maintenance import (
+            cow_delete_ids,
+        )
+
         meta = self.meta()
-        n_buckets, id_col = meta["n_buckets"], meta["id_col"]
+        n_buckets, id_col = meta["n_buckets"], self._id_col(meta, id_col)
         ids = list(ids)
         if not ids:
             return self
@@ -560,25 +486,17 @@ class Bm25Index:
             .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("toks"))
             .collect()[0]
         )
-
-        # COW: rewrite ONLY the touched term-buckets, minus the doomed rows.
-        # localCheckpoint cuts the lineage from the files being overwritten
-        # (a write can't read its own target); dynamic partition overwrite
-        # leaves untouched buckets' files alone. A touched bucket whose rows
-        # are ALL doomed is absent from the written frame — dynamic
-        # overwrite won't rewrite it, so its directory is dropped explicitly.
-        survivors = postings.filter(
-            F.col("bucket").isin(touched) & ~F.col(id_col).isin(ids)
-        ).localCheckpoint(eager=True)
-        self._cow_partitions(postings_dir, survivors, "bucket", touched)
-
-        docs_dir = os.path.join(self.path, "docs")
-        doc_rows = spark.read.parquet(docs_dir)
-        id_buckets = sorted({self.bucket_py(str(i), n_buckets) for i in ids})
-        doc_survivors = doc_rows.filter(
-            F.col("id_bucket").isin(id_buckets) & ~F.col(id_col).isin(ids)
-        ).localCheckpoint(eager=True)
-        self._cow_partitions(docs_dir, doc_survivors, "id_bucket", id_buckets)
+        # COW of ONLY the touched term-buckets, then of the removed ids'
+        # id-buckets in the docs table
+        cow_delete_ids(
+            spark, postings_dir, ["bucket"], id_col, ids, touched=touched,
+            scan=postings, plane=self.plane,
+        )
+        cow_delete_ids(
+            spark, os.path.join(self.path, "docs"), ["id_bucket"], id_col, ids,
+            touched=sorted({self.bucket_py(str(i), n_buckets) for i in ids}),
+            plane=self.plane,
+        )
 
         old = spark.read.parquet(self._terms_dir(meta))
         merged = (
@@ -593,39 +511,9 @@ class Bm25Index:
 
         meta["n_docs"] = int(meta["n_docs"]) - int(gone["n"])
         meta["total_tokens"] = int(meta["total_tokens"]) - int(gone["toks"] or 0)
-        self.plane.write_text(
-            os.path.join(self.path, "meta.json"), json.dumps(meta)
-        )
+        self._write_meta(meta)
         self._sweep_orphan_terms(meta["terms_dir"])
         return self
-
-    def _cow_partitions(
-        self, path: str, survivors: DataFrame, part_col: str, touched: Sequence[int]
-    ) -> None:
-        """Copy-on-write of exactly `touched` partitions: dynamic partition
-        overwrite rewrites the partitions present in `survivors`; touched
-        partitions with NO survivors are deleted outright."""
-        import os
-
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = self.spark.conf.get(key, None)
-        self.spark.conf.set(key, "dynamic")
-        try:
-            survivors.repartition(F.col(part_col)).write.mode("overwrite").partitionBy(
-                part_col
-            ).parquet(path)
-        finally:
-            if prev is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, prev)
-        alive = {r[part_col] for r in survivors.select(part_col).distinct().collect()}
-        for b in touched:
-            if b not in alive:
-                self.plane.remove_tree(os.path.join(path, f"{part_col}={b}"))
-        # drop the now-stale cached file listing for the rewritten path
-        self.spark.catalog.refreshByPath(path)
-        _scan_cache.invalidate(self.spark, path)
 
     # ---- serving ---------------------------------------------------------
     def search(

@@ -33,6 +33,13 @@ from vector_search_ai_assistant_mongodbvcore_spark.functions.vector import (
     cosine_similarity,
     stack_vectors,
 )
+from vector_search_ai_assistant_mongodbvcore_spark.operators.index_base import (
+    MaterializedIndex,
+    apply_duplicate_policy,
+    data_fingerprint,
+    decode_vectors,
+    encode_vectors,
+)
 from vector_search_ai_assistant_mongodbvcore_spark.plans import scan_cache as _scan_cache
 
 
@@ -259,6 +266,14 @@ def _query_codes(
     return [int(((H[t] @ q) > 0) @ weights) for t in range(tables)]
 
 
+def _bucket_filter(codes) -> "F.Column":
+    """Predicate selecting the (table, bucket) partitions `codes`."""
+    cond = F.lit(False)
+    for t, c in codes:
+        cond = cond | ((F.col("table") == t) & (F.col("bucket") == c))
+    return cond
+
+
 def lsh_ann(
     df: DataFrame,
     query: Sequence[float],
@@ -277,10 +292,7 @@ def lsh_ann(
     bucket-partitioned, prune partitions per query."""
     q_codes = _query_codes(query, bits, tables, seed)
     bucketed = lsh_bucket_ids(df, len(query), bits, tables, vector_col, id_col, seed)
-    cond = F.lit(False)
-    for t, c in enumerate(q_codes):
-        cond = cond | ((F.col("table") == t) & (F.col("bucket") == c))
-    candidates = bucketed.filter(cond).select(id_col).distinct()
+    candidates = bucketed.filter(_bucket_filter(enumerate(q_codes))).select(id_col).distinct()
     pruned = df.join(candidates, id_col, "inner")  # shuffle-less if broadcast
     from vector_search_ai_assistant_mongodbvcore_spark.operators.vector_search import vector_search
 
@@ -289,7 +301,7 @@ def lsh_ann(
     )
 
 
-class LshIndex:
+class LshIndex(MaterializedIndex):
     """Materialized random-hyperplane LSH index: the serving-path twin of
     `lsh_ann`. `build` hashes the table ONCE and writes it parquet-
     partitioned by (table, bucket) — `tables` copies of the data, the
@@ -298,41 +310,22 @@ class LshIndex:
     those partitions: Catalyst partition pruning means the scan touches
     ~tables/2^bits of the files, no per-query hashing of the corpus.
 
-    Same layout discipline as IvfIndex (build/exists/build_if_absent/meta);
-    at 100 TB, partition count = tables * 2^bits — size `bits` so each
+    Same lifecycle as the other indexes (operators/index_base.py); at
+    100 TB, partition count = tables * 2^bits — size `bits` so each
     bucket holds many files' worth of rows, not the other way around."""
 
-    def __init__(self, spark, path: str, dataplane=None):
-        from vector_search_ai_assistant_mongodbvcore_spark.sources import (
-            managed_table as _mt,
+    _compact_dirs = (("data", ("table", "bucket")),)
+
+    def _bucketed_rows(self, df: DataFrame, p: dict) -> DataFrame:
+        """(table, bucket, <df columns>) rows in stored form: one pandas-UDF
+        hash pass exploded to `tables` rows per vector, int8-encoded on a
+        quantized index."""
+        bucketed = lsh_bucket_ids(
+            df, p["dims"], p["bits"], p["tables"], p["vector_col"], p["id_col"], p["seed"]
         )
-
-        self.spark = spark
-        self.path = path
-        # r13: metadata + partition cleanup run on the data-plane seam
-        # so the index tablespace shares the tables' storage universe
-        self.plane = dataplane if dataplane is not None else _mt._DEFAULT_DATAPLANE
-
-    def _meta_file(self) -> str:
-        import os
-
-        return os.path.join(self.path, "meta.json")
-
-    def exists(self) -> bool:
-        return self.plane.exists(self._meta_file())
-
-    def build_if_absent(self, df: DataFrame, **build_kwargs) -> "LshIndex":
-        """Create-if-missing OR stale (stored data fingerprint no longer
-        matches `df` — see ivf.data_fingerprint): a regenerated dataset
-        under the same path must force a rebuild, not silently serve the
-        old corpus."""
-        from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import (
-            data_fingerprint,
+        return encode_vectors(
+            bucketed.join(df, p["id_col"]), p.get("quantized"), p["vector_col"]
         )
-
-        if not self.exists() or self.meta().get("fingerprint") != data_fingerprint(df):
-            self.build(df, **build_kwargs)
-        return self
 
     def build(
         self,
@@ -354,56 +347,34 @@ class LshIndex:
         score error is bounded by the per-element quantization step (~1e-2
         on unit vectors, see tests) — pass `exact_source` to search() to
         re-rank a shortlist at full precision."""
-        import json
         import os
 
-        # one pandas-UDF hash pass, exploded to (table, bucket) rows
-        bucketed = lsh_bucket_ids(df, dims, bits, tables, vector_col, id_col, seed)
-        data = bucketed.join(df, id_col)
-        if quantize:
-            from vector_search_ai_assistant_mongodbvcore_spark.functions.vector import (
-                quantize_int8,
-            )
-
-            data = data.withColumn("_q8", quantize_int8(F.col(vector_col))).drop(
-                vector_col
-            )
+        params = {
+            "dims": dims,
+            "bits": bits,
+            "tables": tables,
+            "vector_col": vector_col,
+            "id_col": id_col,
+            "seed": seed,
+            "quantized": quantize,
+        }
         # co-locate buckets before the partitioned write — otherwise every
         # task writes a sliver into every bucket dir (tasks x buckets tiny
         # files). Default shuffle partitioning: each (table, bucket) combo
         # hashes to exactly ONE partition (one file per dir) while write
         # parallelism stays at the full partition count, not `tables`.
-        data.repartition(F.col("table"), F.col("bucket")).write.mode(
-            "overwrite"
-        ).partitionBy("table", "bucket").parquet(os.path.join(self.path, "data"))
+        self._bucketed_rows(df, params).repartition(
+            F.col("table"), F.col("bucket")
+        ).write.mode("overwrite").partitionBy("table", "bucket").parquet(
+            os.path.join(self.path, "data")
+        )
         _scan_cache.invalidate(self.spark, self.path)
-        from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import (
-            data_fingerprint,
-        )
-
-        self.plane.write_text(
-            self._meta_file(),
-            json.dumps(
-                {
-                    "dims": dims,
-                    "bits": bits,
-                    "tables": tables,
-                    "vector_col": vector_col,
-                    "id_col": id_col,
-                    "seed": seed,
-                    "quantized": quantize,
-                    "fingerprint": data_fingerprint(df),
-                }
-            ),
-        )
+        self._write_meta({**params, "fingerprint": data_fingerprint(df)})
         return self
 
-    def meta(self) -> dict:
-        import json
-
-        return json.loads(self.plane.read_text(self._meta_file()))
-
-    def add_documents(self, df: DataFrame, on_duplicate: str = "error") -> "LshIndex":
+    def add_documents(
+        self, df: DataFrame, on_duplicate: str = "error", id_col: "str | None" = None
+    ) -> "LshIndex":
         """Absorb new vectors near-real-time — the ANN twin of the
         reference's add path (AddRemoveData.cs 'add' → upsert → immediately
         searchable) and of Bm25Index.add_documents. LSH keeps NO global
@@ -412,135 +383,46 @@ class LshIndex:
         search() is IDENTICAL to a fresh build over the union corpus
         (asserted in tests), with no rescoring caveats.
 
-        Duplicate-id guard (a re-added id would surface twice in candidate
-        reads and double its vector's storage):
-          on_duplicate='error'  raise naming offenders
-          on_duplicate='skip'   add only unseen ids
-          on_duplicate='trust'  skip the check (saves an id-column scan of
-                                the index; the scan is column-pruned, but
-                                at warehouse scale keep a doc-id side
-                                table as Bm25Index does and trust here)."""
+        Duplicate-id guard: index_base.apply_duplicate_policy ('trust'
+        saves a column-pruned id scan of the index; at warehouse scale keep
+        a doc-id side table as Bm25Index does and trust here)."""
         import os
 
-        if on_duplicate not in ("error", "skip", "trust"):
-            raise ValueError(f"on_duplicate must be error|skip|trust, got {on_duplicate!r}")
         m = self.meta()
-        id_col, vector_col = m["id_col"], m["vector_col"]
+        id_col = self._id_col(m, id_col)
         data_dir = os.path.join(self.path, "data")
-        if on_duplicate != "trust":
-            existing = self.spark.read.parquet(data_dir).select(id_col)
-            dups = df.select(id_col).distinct().join(existing, id_col, "left_semi")
-            if on_duplicate == "error":
-                offenders = [r[id_col] for r in dups.limit(10).collect()]
-                if offenders:
-                    raise ValueError(
-                        f"ids already indexed: {offenders!r}; "
-                        f"use on_duplicate='skip' to add only new ids"
-                    )
-            else:
-                df = df.join(dups, id_col, "left_anti")
-        bucketed = lsh_bucket_ids(
-            df, m["dims"], m["bits"], m["tables"], vector_col, id_col, m["seed"]
+        df = apply_duplicate_policy(
+            df, id_col, on_duplicate,
+            lambda _: self.spark.read.parquet(data_dir).select(id_col),
         )
-        data = bucketed.join(df, id_col)
-        if m.get("quantized"):
-            from vector_search_ai_assistant_mongodbvcore_spark.functions.vector import (
-                quantize_int8,
-            )
-
-            data = data.withColumn("_q8", quantize_int8(F.col(vector_col))).drop(
-                vector_col
-            )
-        data.repartition(F.col("table"), F.col("bucket")).write.mode(
+        self._bucketed_rows(df, m).repartition(F.col("table"), F.col("bucket")).write.mode(
             "append"
         ).partitionBy("table", "bucket").parquet(data_dir)
         self.spark.catalog.refreshByPath(data_dir)
         _scan_cache.invalidate(self.spark, self.path)
         return self
 
-    def remove_documents(self, ids: "Sequence") -> "LshIndex":
+    def remove_documents(self, ids: "Sequence", id_col: "str | None" = None) -> "LshIndex":
         """Delete vectors near-real-time: the removed ids' (table, bucket)
-        partitions are rewritten copy-on-write (dynamic partition
-        overwrite) minus the doomed rows; untouched partitions' files are
-        never rewritten, and a partition left empty is dropped outright.
-        After remove_documents, search() is IDENTICAL to a fresh build
-        over the survivors (asserted in tests). Unknown ids are ignored.
-
-        Cost is O(touched partitions' rows) — each id occupies `tables`
-        partitions — never a full-index rewrite."""
+        partitions are rewritten copy-on-write minus the doomed rows
+        (sources/maintenance.cow_delete_ids); untouched partitions' files
+        are never rewritten, and a partition left empty is dropped
+        outright. After remove_documents, search() is IDENTICAL to a fresh
+        build over the survivors (asserted in tests). Unknown ids are
+        ignored. Each id occupies `tables` partitions."""
         import os
 
-        ids = list(ids)
-        if not ids:
-            return self
-        m = self.meta()
-        id_col = m["id_col"]
-        data_dir = os.path.join(self.path, "data")
-        scan = self.spark.read.parquet(data_dir)
-        doomed = scan.filter(F.col(id_col).isin(ids))
-        touched = [
-            (r["table"], r["bucket"])
-            for r in doomed.select("table", "bucket").distinct().collect()
-        ]
-        if not touched:
-            return self
-        t_cond = F.lit(False)
-        for t, b in touched:
-            t_cond = t_cond | ((F.col("table") == t) & (F.col("bucket") == b))
-        survivors = scan.filter(t_cond & ~F.col(id_col).isin(ids)).localCheckpoint(
-            eager=True
-        )
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = self.spark.conf.get(key, None)
-        self.spark.conf.set(key, "dynamic")
-        try:
-            survivors.repartition(F.col("table"), F.col("bucket")).write.mode(
-                "overwrite"
-            ).partitionBy("table", "bucket").parquet(data_dir)
-        finally:
-            if prev is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, prev)
-        alive = {
-            (r["table"], r["bucket"])
-            for r in survivors.select("table", "bucket").distinct().collect()
-        }
-        for t, b in touched:
-            if (t, b) not in alive:
-                self.plane.remove_tree(
-                    os.path.join(data_dir, f"table={t}", f"bucket={b}")
-                )
-        self.spark.catalog.refreshByPath(data_dir)
-        _scan_cache.invalidate(self.spark, self.path)
-        return self
-
-    def compact(self, max_files_per_partition: int = 8) -> int:
-        """Maintenance (the OPTIMIZE analog for the append add-path):
-        every add_documents call lands one more file set into the touched
-        (table, bucket) partitions, so under streaming ingest a hot
-        partition's file count — and search's candidate-read open cost —
-        grows with BATCH COUNT. Rewrites exactly the partitions holding
-        >= max_files_per_partition parquet files; returns how many were
-        rewritten (0 = zero IO). Search results are unchanged (asserted
-        in tests); run it from the ingest sink (incremental.py's
-        compact_every) or whenever the stream is idle."""
-        import os as _os
-
         from vector_search_ai_assistant_mongodbvcore_spark.sources.maintenance import (
-            compact_partitioned_dir,
+            cow_delete_ids,
         )
 
-        n = compact_partitioned_dir(
-            self.spark,
-            _os.path.join(self.path, "data"),
-            ["table", "bucket"],
-            max_files_per_partition,
-            plane=self.plane,
-        )
-        if n:
-            _scan_cache.invalidate(self.spark, self.path)
-        return n
+        ids = list(ids)
+        if ids:
+            cow_delete_ids(
+                self.spark, os.path.join(self.path, "data"), ["table", "bucket"],
+                self._id_col(self.meta(), id_col), ids, plane=self.plane,
+            )
+        return self
 
     def search(
         self,
@@ -554,54 +436,42 @@ class LshIndex:
         """Partition-pruned top-k. On a quantized index, scores come from
         the dequantized int8 codes (error ~ the quantization step); pass
         `exact_source` (the full-precision table, same id/vector cols) to
-        re-rank: the index shortlists k*expand ids from int8 scores, the
-        source is semi-joined on that tiny broadcast id set and rescored
-        exactly. At warehouse scale keep the source bucketed/sorted by id
-        so the semi join prunes instead of scanning."""
+        re-rank: the index shortlists k*expand ids from int8 scores and
+        batch_serving.exact_rerank rescores them exactly."""
         import os
 
-        m = self.meta()
-        q_codes = _query_codes(query, m["bits"], m["tables"], m["seed"])
-        scan = _scan_cache.cached_parquet(self.spark, os.path.join(self.path, "data"))
-        cond = F.lit(False)
-        for t, c in enumerate(q_codes):
-            cond = cond | ((F.col("table") == t) & (F.col("bucket") == c))
-        # partition-pruned candidate read; same id may sit in several tables
-        candidates = scan.filter(cond).dropDuplicates([m["id_col"]]).drop("table", "bucket")
-        if m.get("quantized"):
-            from vector_search_ai_assistant_mongodbvcore_spark.functions.vector import (
-                dequantize_int8,
-            )
-
-            candidates = candidates.withColumn(
-                m["vector_col"], dequantize_int8("_q8")
-            ).drop("_q8")
+        from vector_search_ai_assistant_mongodbvcore_spark.operators.batch_serving import (
+            exact_rerank,
+        )
         from vector_search_ai_assistant_mongodbvcore_spark.operators.vector_search import (
             vector_search,
         )
 
-        shortlist_k = k * expand if (m.get("quantized") and exact_source is not None) else k
+        m = self.meta()
+        id_col, vector_col = m["id_col"], m["vector_col"]
+        q_codes = _query_codes(query, m["bits"], m["tables"], m["seed"])
+        scan = _scan_cache.cached_parquet(self.spark, os.path.join(self.path, "data"))
+        # partition-pruned candidate read; same id may sit in several tables
+        candidates = (
+            scan.filter(_bucket_filter(enumerate(q_codes)))
+            .dropDuplicates([id_col])
+            .drop("table", "bucket")
+        )
+        rerank = bool(m.get("quantized")) and exact_source is not None
         approx = vector_search(
-            candidates,
+            decode_vectors(candidates, m.get("quantized"), vector_col),
             list(query),
-            k=shortlist_k,
-            vector_col=m["vector_col"],
+            k=k * expand if rerank else k,
+            vector_col=vector_col,
             use_pandas=use_pandas,
-            id_col=m["id_col"],
+            id_col=id_col,
             round_scores=round_scores,
         )
-        if not (m.get("quantized") and exact_source is not None):
+        if not rerank:
             return approx
-        ids = approx.select(m["id_col"])
-        exact_cands = exact_source.join(F.broadcast(ids), m["id_col"], "left_semi")
-        return vector_search(
-            exact_cands,
-            list(query),
-            k=k,
-            vector_col=m["vector_col"],
-            use_pandas=use_pandas,
-            id_col=m["id_col"],
-            round_scores=round_scores,
+        return exact_rerank(
+            approx, exact_source, list(query), k, vector_col, id_col, use_pandas,
+            round_scores,
         )
 
     def search_many(
@@ -632,19 +502,14 @@ class LshIndex:
 
         from vector_search_ai_assistant_mongodbvcore_spark.operators.batch_serving import (
             collect_query_batch,
-            finish_scores,
-            make_cosine_scores_by_query,
-            normalized_query_matrix,
-            topk_per_query,
-        )
-        from vector_search_ai_assistant_mongodbvcore_spark.functions.vector import (
-            dequantize_int8,
+            cosine_topk_per_query,
+            exact_rerank_many,
         )
 
         pairs, qid_type = collect_query_batch(queries, query_id_col, query_vec_col)
         m = self.meta()
         id_col, vector_col = m["id_col"], m["vector_col"]
-        shortlist_k = k * expand if (m.get("quantized") and exact_source is not None) else k
+        rerank = bool(m.get("quantized")) and exact_source is not None
 
         route_rows = []
         for qid, vec in pairs:
@@ -656,57 +521,22 @@ class LshIndex:
         )
         hit_parts = {(t, c) for _, t, c, _ in route_rows}
         scan = _scan_cache.cached_parquet(self.spark, os.path.join(self.path, "data"))
-        cond = F.lit(False)
-        for t, c in sorted(hit_parts):
-            cond = cond | ((F.col("table") == t) & (F.col("bucket") == c))
         candidates = (
-            scan.filter(cond)
+            scan.filter(_bucket_filter(sorted(hit_parts)))
             .join(F.broadcast(routing), ["table", "bucket"])
             .dropDuplicates(["query_id", id_col])
             .drop("table", "bucket")
         )
-        if m.get("quantized"):
-            candidates = candidates.withColumn(
-                vector_col, dequantize_int8("_q8")
-            ).drop("_q8")
-        if use_pandas:
-            scorer = make_cosine_scores_by_query(normalized_query_matrix(pairs))
-            scored = candidates.withColumn(
-                "score", scorer(F.col("query_id"), F.col(vector_col))
-            )
-        else:
-            scored = candidates.withColumn(
-                "score",
-                cosine_similarity(
-                    F.col(vector_col).cast("array<double>"), F.col("_qvec")
-                ),
-            )
-        scored = finish_scores(scored, "score", round_scores)
-        approx = topk_per_query(scored, "query_id", id_col, "score", shortlist_k)
-        if not (m.get("quantized") and exact_source is not None):
-            return approx
-        shortlist = approx.select("query_id", id_col)
-        exact_cands = exact_source.join(F.broadcast(shortlist), id_col).select(
-            "query_id", id_col, vector_col
+        approx = cosine_topk_per_query(
+            decode_vectors(candidates, m.get("quantized"), vector_col), pairs, id_col,
+            vector_col, k * expand if rerank else k, use_pandas, round_scores,
         )
-        if use_pandas:
-            scorer = make_cosine_scores_by_query(normalized_query_matrix(pairs))
-            rescored = exact_cands.withColumn(
-                "score", scorer(F.col("query_id"), F.col(vector_col))
-            )
-        else:
-            qvecs = self.spark.createDataFrame(
-                [(qid, [float(x) for x in vec]) for qid, vec in pairs],
-                f"query_id {qid_type}, _qvec array<double>",
-            )
-            rescored = exact_cands.join(F.broadcast(qvecs), "query_id").withColumn(
-                "score",
-                cosine_similarity(
-                    F.col(vector_col).cast("array<double>"), F.col("_qvec")
-                ),
-            )
-        rescored = finish_scores(rescored, "score", round_scores)
-        return topk_per_query(rescored, "query_id", id_col, "score", k)
+        if not rerank:
+            return approx
+        return exact_rerank_many(
+            approx, exact_source, pairs, qid_type, k, id_col, vector_col, use_pandas,
+            round_scores,
+        )
 
 
 def embedding_neardup(

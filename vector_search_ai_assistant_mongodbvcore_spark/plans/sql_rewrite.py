@@ -162,12 +162,16 @@ _COSINE_CALL_RE = re.compile(r"cosine_sim\s*\(", re.IGNORECASE)
 
 
 def _call_spans(blanked: str, name: str) -> "list[tuple[int, int, int]]":
-    """Every `name(...)` call span in quote-blanked text, as
+    """Every OUTERMOST `name(...)` call span in quote-blanked text, as
     (name_start, open_paren, end_after_close) triples — depth counted on
     the blanked text, so parens/commas inside quoted strings are
-    content. Unbalanced calls are skipped (the caller declines)."""
+    content. A call nested inside a reported one is not reported (the
+    spans never overlap); unbalanced calls are skipped (the caller
+    declines)."""
     spans: list[tuple[int, int, int]] = []
     for m in re.finditer(re.escape(name) + r"\s*\(", blanked, re.IGNORECASE):
+        if spans and m.start() < spans[-1][2]:
+            continue  # nested inside the previous outermost call
         depth = 1
         i = m.end()
         while i < len(blanked) and depth:
@@ -180,6 +184,16 @@ def _call_spans(blanked: str, name: str) -> "list[tuple[int, int, int]]":
         if depth == 0:
             spans.append((m.start(), m.end() - 1, i))
     return spans
+
+
+def _single_cosine_span(blanked: str) -> "tuple[int, int, int] | None":
+    """The span of the query's ONE cosine_sim call, else None: two calls
+    — side by side or nested — make the probe-vector extraction
+    ambiguous, so every rewrite declines them."""
+    if len(_COSINE_CALL_RE.findall(blanked)) != 1:
+        return None
+    spans = _call_spans(blanked, "cosine_sim")
+    return spans[0] if spans else None
 
 
 def _second_arg_span(blanked: str, open_paren: int) -> "tuple[int, int] | None":
@@ -212,6 +226,28 @@ def _render_vec_literal(vec) -> str:
     return "array(" + ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in vec) + ")"
 
 
+_KIND_NAMES = {"ivf": "an IVF", "lsh": "an LSH", "hnsw": "an HNSW"}
+
+
+def _index_class(kind: str):
+    """The index class serving a vector registration of `kind`."""
+    if kind == "ivf":
+        from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import IvfIndex
+
+        return IvfIndex
+    if kind == "lsh":
+        from vector_search_ai_assistant_mongodbvcore_spark.operators.similarity import (
+            LshIndex,
+        )
+
+        return LshIndex
+    from vector_search_ai_assistant_mongodbvcore_spark.operators.hnsw import (
+        PartitionedHnswIndex,
+    )
+
+    return PartitionedHnswIndex
+
+
 class VectorSqlSession:
     """spark.sql with the IVF top-k rewrite (see module docstring).
 
@@ -232,9 +268,9 @@ class VectorSqlSession:
         # through the data-plane seam, so raw-SQL serving works against
         # an object-store index tablespace too
         self.plane = dataplane if dataplane is not None else _mt._DEFAULT_DATAPLANE
-        self._indexes: dict[str, tuple[str, int, "DataFrame | None"]] = {}
-        self._lsh: dict[str, tuple[str, "DataFrame | None"]] = {}
-        self._hnsw: dict[str, tuple[str, "int | None"]] = {}
+        # table -> (kind, index path, index.search kwargs): ONE vector
+        # access path per table, whatever the index kind
+        self._vector: dict[str, tuple[str, str, dict]] = {}
         self._bm25: dict[str, str] = {}
         self._embedders: set[str] = set()
         register_cosine_sql(spark)
@@ -285,16 +321,23 @@ class VectorSqlSession:
         serve declines to the correct full scan rather than return
         quantized scores for SQL that asked for exact cosine_sim.
         A table may carry ONE vector index registration: registering
-        over an existing LSH registration raises rather than serve an
-        ambiguous access path."""
+        over an existing LSH or HNSW registration raises rather than
+        serve an ambiguous access path."""
+        self._register_vector(
+            table, "ivf", index_path, n_probe=n_probe, exact_source=exact_source
+        )
+
+    def _register_vector(self, table: str, kind: str, index_path: str, **search_kwargs) -> None:
+        """Record `table`'s one vector access path; re-registering the
+        same kind replaces it, another kind raises."""
         key = table.lower()
-        if key in self._lsh or key in self._hnsw:
-            other = "an LSH" if key in self._lsh else "an HNSW"
+        prior = self._vector.get(key)
+        if prior is not None and prior[0] != kind:
             raise ValueError(
-                f"table {table!r} already has {other} registration — one "
-                "vector access path per table (unregister or use a view)"
+                f"table {table!r} already has {_KIND_NAMES[prior[0]]} registration — "
+                "one vector access path per table (unregister or use a view)"
             )
-        self._indexes[key] = (index_path, n_probe, exact_source)
+        self._vector[key] = (kind, index_path, search_kwargs)
 
     def register_lsh_index(
         self,
@@ -315,14 +358,7 @@ class VectorSqlSession:
         `exact_source` (shortlist + exact rerank) — without one the
         serve declines to the correct full scan. Same
         one-registration-per-table rule as register_index."""
-        key = table.lower()
-        if key in self._indexes or key in self._hnsw:
-            other = "an IVF" if key in self._indexes else "an HNSW"
-            raise ValueError(
-                f"table {table!r} already has {other} registration — one "
-                "vector access path per table (unregister or use a view)"
-            )
-        self._lsh[key] = (index_path, exact_source)
+        self._register_vector(table, "lsh", index_path, exact_source=exact_source)
 
     def register_hnsw_index(
         self,
@@ -346,14 +382,7 @@ class VectorSqlSession:
         quantization error to undo. `ef_search` overrides the beam width
         stored at build time for every serve through this registration.
         Same one-vector-registration-per-table rule as the other two."""
-        key = table.lower()
-        if key in self._indexes or key in self._lsh:
-            other = "an IVF" if key in self._indexes else "an LSH"
-            raise ValueError(
-                f"table {table!r} already has {other} registration — one "
-                "vector access path per table (unregister or use a view)"
-            )
-        self._hnsw[key] = (index_path, ef_search)
+        self._register_vector(table, "hnsw", index_path, ef_search=ef_search)
 
     def register_auto(self, table: str, index_path: str, **kwargs) -> str:
         """Sniff the index KIND from the dir's meta.json and route to
@@ -432,10 +461,10 @@ class VectorSqlSession:
         # is MASKED out of the copy the structural guards scan, so a
         # probe expressed as a scalar subquery (whose FROM/WHERE live
         # inside the call) no longer trips the single-relation guards
-        spans = _call_spans(blanked, "cosine_sim")
-        if len(spans) != 1:
+        span = _single_cosine_span(blanked)
+        if span is None:
             return None
-        c_start, c_open, c_end = spans[0]
+        c_start, c_open, c_end = span
         masked = blanked[:c_start] + " " * (c_end - c_start) + blanked[c_end:]
         om = _ORDER_RE.search(masked)
         fm = _FROM_RE.search(masked)
@@ -468,10 +497,9 @@ class VectorSqlSession:
         ):
             return None
         table = fm.group("table")
-        reg = self._indexes.get(table.lower())
-        if reg is None:
+        kind, index_path, search_kwargs = self._vector.get(table.lower(), (None, None, None))
+        if kind != "ivf":
             return None
-        index_path, n_probe, _exact = reg
         target = om.group("target")
         if target.lower().startswith("cosine_sim"):
             # inline ORDER BY cosine_sim(...): Spark rejects SQL UDFs
@@ -499,7 +527,7 @@ class VectorSqlSession:
         qvec = self._probe_vector(vec_lit)
         if qvec is None:
             return None
-        probes = idx.nearest_centroids(qvec, n_probe)
+        probes = idx.nearest_centroids(qvec, search_kwargs["n_probe"])
         pruned = (
             self.spark.read.parquet(os.path.join(index_path, "data"))
             .filter(F.col("centroid_id").isin(probes))
@@ -830,21 +858,19 @@ class VectorSqlSession:
         Unrecognized shapes pass through to the (correct, unpruned)
         full scan of the raw table."""
         blanked = self._blank_quoted(query)
-        spans = _call_spans(blanked, "cosine_sim")
-        if len(spans) != 1:
+        span = _single_cosine_span(blanked)
+        if span is None:
             return None
-        c_start, _c_open, c_end = spans[0]
+        c_start, _c_open, c_end = span
         masked = blanked[:c_start] + " " * (c_end - c_start) + blanked[c_end:]
         om = self._BM25_ORDER_RE.search(masked)
         fm = _FROM_RE.search(masked)
         if not om or not fm:
             return None
-        table = fm.group("table").lower()
-        lsh_reg = self._lsh.get(table)
-        ivf_reg = self._indexes.get(table)
-        hnsw_reg = self._hnsw.get(table)
-        if lsh_reg is None and ivf_reg is None and hnsw_reg is None:
+        reg = self._vector.get(fm.group("table").lower())
+        if reg is None:
             return None
+        kind, index_path, search_kwargs = reg
         if len(_FROM_RE.findall(masked)) != 1:
             return None
         if re.search(r"\bFROM\s*\(", masked, re.IGNORECASE):
@@ -879,99 +905,51 @@ class VectorSqlSession:
         # evaluated — that evaluation is a driver-side Spark job, and an
         # unquantized-IVF query (served by the FROM-substitution rule,
         # which evaluates the literal itself) must not pay it twice
-        k = int(om.group("k"))
-        if lsh_reg is not None:
-            from vector_search_ai_assistant_mongodbvcore_spark.operators.similarity import (
-                LshIndex,
-            )
-
-            index_path, exact = lsh_reg
-            idx = LshIndex(self.spark, index_path, dataplane=self.plane)
-            if not idx.exists():
-                return None
-            m = idx.meta()
-            if vec_col.lower() != str(m.get("vector_col", "")).lower():
-                return None
-            if user_id.lower() != str(m.get("id_col", "")).lower():
-                return None
-            if m.get("quantized") and exact is None:
-                # the SQL asks for exact cosine_sim; int8-dequantized
-                # scores would silently change the VALUES (candidate
-                # recall is the registered LSH contract, score accuracy
-                # is not) — without an exact_source rerank, decline to
-                # the correct full scan
-                return None
-        elif hnsw_reg is not None:
+        idx = _index_class(kind)(self.spark, index_path, dataplane=self.plane)
+        if not idx.exists():
+            return None
+        m = idx.meta()
+        if kind == "ivf" and not m.get("quantized"):
+            return None  # unquantized: the FROM-substitution rule serves it
+        if m.get("quantized") and search_kwargs.get("exact_source") is None:
+            # quantized scores (int8 dequant / PQ ADC) are not the
+            # cosine_sim the SQL asks for — candidate recall is the
+            # registered contract, score accuracy is not: the engine
+            # contract for quantized serving is shortlist + exact rerank,
+            # so a registration without exact_source declines to the
+            # correct full scan rather than serve approximate values
+            return None
+        if kind == "hnsw":
             from vector_search_ai_assistant_mongodbvcore_spark.operators.hnsw import (
                 _SEGMENT_LAYOUT,
-                PartitionedHnswIndex,
             )
 
-            index_path, ef_search = hnsw_reg
-            idx = PartitionedHnswIndex(self.spark, index_path, dataplane=self.plane)
-            if not idx.exists():
-                return None
-            m = idx.meta()
+            # a pre-current on-disk segment format would raise deep in
+            # the serve — decline to the correct full scan instead. (No
+            # quantization gate for HNSW: its candidates carry EXACT
+            # cosine scores; approximation lives only in candidate recall,
+            # which registering opted into.)
             if m.get("layout") != _SEGMENT_LAYOUT:
-                # a pre-current on-disk segment format would raise deep in
-                # the serve — decline to the correct full scan instead
                 return None
-            if vec_col.lower() != str(m.get("vector_col", "")).lower():
-                return None
-            if user_id.lower() != str(m.get("id_col", "")).lower():
-                return None
-            # no quantization gate: HNSW candidates carry EXACT cosine
-            # scores (the graph kernel scores every visited node against
-            # the true vectors) — approximation lives only in candidate
-            # recall, which registering opted into
-        else:
-            from vector_search_ai_assistant_mongodbvcore_spark.operators.ivf import IvfIndex
-
-            index_path, n_probe, exact = ivf_reg
-            idx = IvfIndex(self.spark, index_path, dataplane=self.plane)
-            if not idx.exists():
-                return None
-            m = idx.meta()
-            if not m.get("quantized"):
-                return None  # unquantized: the FROM-substitution rule serves it
-            if exact is None:
-                # quantized scores (int8 dequant / PQ ADC) are not the
-                # cosine_sim the SQL asks for: the engine contract for
-                # quantized serving is shortlist + exact rerank, so a
-                # registration without exact_source declines to the
-                # correct full scan rather than serve approximate values
-                return None
-            if vec_col.lower() != str(m.get("vector_col", "")).lower():
-                return None
-            if user_id.lower() != str(m.get("id_col", "")).lower():
-                # ADVICE r11 (medium): mirror the LSH branch — a SELECT
-                # naming any column other than the index's unique id
-                # would make that column IvfIndex.search's shortlist key
-                # AND the exact_source semi-join rerank key; a non-unique
-                # column there inflates/collapses the candidate set, a
-                # change beyond the documented shortlist-recall
-                # approximation. Decline to the correct full scan.
-                # (Indexes built before meta carried id_col decline too —
-                # correctness over serving.)
-                return None
+        if vec_col.lower() != str(m.get("vector_col", "")).lower():
+            return None
+        if user_id.lower() != str(m.get("id_col", "")).lower():
+            # a SELECT naming any column other than the index's unique id
+            # would make that column the shortlist key AND the
+            # exact_source semi-join rerank key; a non-unique column there
+            # inflates/collapses the candidate set, a change beyond the
+            # documented shortlist-recall approximation. (IVF indexes
+            # built before meta carried id_col decline too — correctness
+            # over serving.)
+            return None
         # evaluate the probe ONCE driver-side (literal / embedder call /
         # scalar subquery — see _probe_vector)
         qvec = self._probe_vector(vec_lit)
         if qvec is None:
             return None
-        if lsh_reg is not None:
-            out = idx.search(qvec, k=k, round_scores=round_d, exact_source=exact)
-        elif hnsw_reg is not None:
-            out = idx.search(qvec, k=k, ef_search=ef_search, round_scores=round_d)
-        else:
-            out = idx.search(
-                qvec,
-                k=k,
-                n_probe=n_probe,
-                id_col=user_id,
-                round_scores=round_d,
-                exact_source=exact,
-            )
+        if kind == "ivf":
+            search_kwargs = dict(search_kwargs, id_col=user_id)
+        out = idx.search(qvec, k=int(om.group("k")), round_scores=round_d, **search_kwargs)
         cols = [
             F.col(user_id).alias(id_alias or user_id)
             if it is id_text

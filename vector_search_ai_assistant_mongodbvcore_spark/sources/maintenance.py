@@ -11,6 +11,15 @@ could. This module is the Delta OPTIMIZE analog for those raw
 partitioned dirs (BucketedTable has its own compact()): rewrite exactly
 the partitions whose file count crossed a threshold, via dynamic-
 partition overwrite, leaving every other partition's files untouched.
+Its delete twin, `cow_delete_ids`, is the remove path of the same
+indexes: rewrite exactly the partitions holding the removed ids.
+
+Both set dynamic overwrite PER WRITE (`.option`), never through the
+session-wide `spark.sql.sources.partitionOverwriteMode`: one SparkSession
+is shared across threads, and flipping that conf would make a concurrent
+build()'s overwrite keep stale partitions — or, once another commit
+unset it, make a second copy-on-write's overwrite static and delete
+every untouched partition.
 
 Wired into the streaming sinks as a cadence knob
 (`streaming/incremental.py start_*_change_stream(compact_every=N)`) so
@@ -27,10 +36,15 @@ concurrency for stores that need compaction to race writers safely.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import os
+from functools import reduce
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["partition_file_counts", "compact_partitioned_dir"]
+from vector_search_ai_assistant_mongodbvcore_spark.plans import scan_cache as _scan_cache
+
+__all__ = ["partition_file_counts", "compact_partitioned_dir", "cow_delete_ids"]
 
 
 def _plane(plane):
@@ -106,3 +120,67 @@ def compact_partitioned_dir(
     )
     spark.catalog.refreshByPath(data_dir)
     return len(fat)
+
+
+def _partitions_filter(partition_cols: "list[str]", keys: "list[tuple]"):
+    """Predicate selecting exactly the partitions `keys` (value tuples)."""
+    if len(partition_cols) == 1:
+        return F.col(partition_cols[0]).isin([k[0] for k in keys])
+    return reduce(
+        lambda acc, key: acc
+        | reduce(lambda a, b: a & b, [F.col(c) == v for c, v in zip(partition_cols, key)]),
+        keys,
+        F.lit(False),
+    )
+
+
+def cow_delete_ids(
+    spark: SparkSession,
+    data_dir: str,
+    partition_cols: "list[str]",
+    id_col: str,
+    ids: list,
+    touched: "list | None" = None,
+    scan: "DataFrame | None" = None,
+    plane=None,
+) -> None:
+    """Copy-on-write delete: rewrite exactly the partitions of `data_dir`
+    holding rows whose `id_col` is in `ids`, minus those rows. Untouched
+    partitions' files are never rewritten, and a touched partition left
+    empty is dropped outright (dynamic overwrite only replaces partitions
+    present in the written frame). Cost is O(touched partitions' rows),
+    never a full rewrite. `touched` — partition values, scalars for one
+    column or tuples for several — skips the discovery scan when the
+    caller already knows them; unknown ids are a no-op either way.
+    `scan` reuses the caller's read of `data_dir` (each read lists the
+    dir and infers the schema).
+
+    The survivors are localCheckpointed first: a write cannot read its
+    own target."""
+    if scan is None:
+        scan = spark.read.parquet(data_dir)
+    if touched is None:
+        doomed = scan.filter(F.col(id_col).isin(ids)).select(*partition_cols)
+        keys = [tuple(r) for r in doomed.distinct().collect()]
+    else:
+        keys = [k if isinstance(k, tuple) else (k,) for k in touched]
+    if not keys:
+        return
+    survivors = scan.filter(
+        _partitions_filter(partition_cols, keys) & ~F.col(id_col).isin(ids)
+    ).localCheckpoint(eager=True)
+    (
+        survivors.repartition(*[F.col(c) for c in partition_cols])
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(data_dir)
+    )
+    alive = {tuple(r) for r in survivors.select(*partition_cols).distinct().collect()}
+    for key in keys:
+        if key not in alive:
+            _plane(plane).remove_tree(
+                os.path.join(data_dir, *[f"{c}={v}" for c, v in zip(partition_cols, key)])
+            )
+    spark.catalog.refreshByPath(data_dir)
+    _scan_cache.invalidate(spark, data_dir)

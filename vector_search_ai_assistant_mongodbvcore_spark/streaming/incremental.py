@@ -105,32 +105,26 @@ def apply_index_changes(
     op_col: str = "_op",
     text_exclude: tuple[str, ...] = (),
 ) -> None:
-    """foreachBatch body maintaining a SERVING INDEX (LshIndex) instead of
-    a table: upserts re-embed the document text and replace the id's index
-    rows (remove-then-add — exact upsert semantics, no duplicate
-    candidates); deletes remove. This closes the reference's near-real-time
-    loop at the index layer: a change record is searchable from the
-    partition-pruned index at the next micro-batch commit, mirroring how
-    the reference's upsert is immediately visible to $search
-    (AddRemoveData.cs + MongoDbService.UpsertProductAsync).
+    """foreachBatch body maintaining a SERVING INDEX (IvfIndex, LshIndex or
+    PartitionedHnswIndex) instead of a table: upserts re-embed the
+    document text and replace the id's index rows (remove-then-add —
+    exact upsert semantics, no duplicate candidates; on HNSW the add is a
+    delta segment and the remove per-segment tombstones); deletes remove.
+    This closes the reference's near-real-time loop at the index layer: a
+    change record is searchable from the index at the next micro-batch
+    commit, mirroring how the reference's upsert is immediately visible
+    to $search (AddRemoveData.cs + MongoDbService.UpsertProductAsync).
 
-    Cost per batch: O(changed ids' (table, bucket) partitions) — the
-    remove is a COW of the touched partitions, the add an append. Safe
-    under streaming retries: remove-then-add is idempotent for the same
-    batch content."""
-    import inspect
-
+    Cost per batch: O(changed ids' partitions) — the remove is a COW of
+    the touched partitions, the add an append. Safe under streaming
+    retries: remove-then-add is idempotent for the same batch content."""
     embedder = embedder or HashNgramEmbedder()
     m = index.meta()
     vector_col = m["vector_col"]
-    # LshIndex records its id column in meta and keys remove/add off it;
-    # IvfIndex takes id_col per call (duck-typed off the method signature,
-    # so the same foreachBatch body maintains any ANN index —
-    # PartitionedHnswIndex rides it too: upserts become delta segments,
-    # deletes per-segment tombstones)
+    # every index keys add/remove off its stored id column; an IvfIndex
+    # built without a real id column stores none, so the records' own
+    # id column keys it
     stored_id = m.get("id_col", id_col)
-    takes_id = "id_col" in inspect.signature(index.remove_documents).parameters
-    id_kw = {"id_col": stored_id} if takes_id else {}
     upserts = batch_df.filter(F.col(op_col) == "upsert").drop(op_col)
     deletes = batch_df.filter(F.col(op_col) == "delete").drop(op_col)
     if upserts.isEmpty() is False:
@@ -142,11 +136,11 @@ def apply_index_changes(
             embedder.udf()(doc_text).cast("array<float>").alias(vector_col),
         )
         ids = [r[stored_id] for r in up_rows.select(stored_id).distinct().collect()]
-        index.remove_documents(ids, **id_kw)
-        index.add_documents(up_rows, on_duplicate="trust", **id_kw)
+        index.remove_documents(ids, id_col=stored_id)
+        index.add_documents(up_rows, id_col=stored_id, on_duplicate="trust")
     if deletes.isEmpty() is False:
         ids = [r[id_col] for r in deletes.select(id_col).distinct().collect()]
-        index.remove_documents(ids, **id_kw)
+        index.remove_documents(ids, id_col=stored_id)
 
 
 def start_index_change_stream(
